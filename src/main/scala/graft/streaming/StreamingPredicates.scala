@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -9,14 +9,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * stream-shaped data, batch execution; SURVEY.md §2.10 marks this as the
   * post-parity extension).
   *
-  * Two building blocks:
-  *   - [[windowedCounts]]: watermarked tumbling-window predicate counts —
-  *     the streaming analogue of the same-instant collapse + temporal
-  *     bucketing. Late events beyond the watermark are dropped; state is
-  *     bounded by (watermark horizon × subjects-per-window).
-  *   - [[cumulativeCounts]]: per-subject running predicate totals via
-  *     `flatMapGroupsWithState` — the streaming analogue of
-  *     `cumsum_over_subject`, with explicit state eviction on inactivity.
+  * Building blocks:
+  *   - [[windowedCounts]] / [[sessionizeStream]]: watermarked
+  *     tumbling-window predicate counts and gap sessions on Spark's
+  *     native window operators — late events beyond the watermark are
+  *     dropped; state is bounded by (watermark horizon × subjects).
+  *   - [[cohortWindows]]: trigger-anchored multi-window cohort rows
+  *     (temporal and event-bound windows, `has:` constraints), emitted
+  *     once the watermark closes every window; [[triggerWindowCounts]]
+  *     is its one-window projection.
+  *   - the near-dup streams (minhash, embedding, phash / afp, video):
+  *     one bucketed-pair state core ([[bucketedPairs]]) with TTL
+  *     eviction and a saturation latch; each family supplies only its
+  *     bucket key, stored payload and pair rule.
+  *   - dedup and scoring on the ingest path: exact / url dedup within
+  *     the watermark, duplicate-span counts ([[substringDupStream]]),
+  *     decontamination, quality and perplexity scoring.
+  *   - [[cumulativeCounts]]: per-subject running predicate totals — the
+  *     streaming analogue of `cumsum_over_subject`.
   *
   * For a full streaming cohort extractor, the watermark must cover the
   * task's maximum lookback/lookahead (max window span in the tree), after
@@ -40,10 +50,24 @@ object StreamingPredicates {
   private def satAdd(a: Long, b: Long): Long =
     if (b >= Long.MaxValue - math.max(a, 0L)) Long.MaxValue else a + b
 
-  /** TTL/latch entry decisions shared by the near-dup stream operators
-    * (minhash / embedding / phash) so the eviction clock can never
-    * diverge between them: returns (stillSaturated, live entry indexes).
-    * A saturated latch holds `ts = [lastArrival]` and clears — fresh
+  /** Event time in microseconds of a routed row's `timestamp`. */
+  private def tsMicros(t: java.sql.Timestamp): Long =
+    (t.getTime / 1000L) * 1000000L + t.getNanos / 1000L
+
+  /** Arm the event-time timeout at the earliest instant an entry that
+    * arrived at `fromMicros` can expire (`fromMicros + ttlMicros`, never
+    * behind the current watermark). No timeout for an infinite TTL.
+    */
+  private def armTtl(
+      state: GroupState[_], fromMicros: Long, ttlMicros: Long, wmMicros: Long): Unit =
+    if (ttlMicros < Long.MaxValue)
+      state.setTimeoutTimestamp(
+        math.max(satAdd(fromMicros, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
+
+  /** TTL/latch entry decisions of the shared near-dup core
+    * ([[bucketedPairs]]), so the eviction clock is one definition for
+    * every family: returns (stillSaturated, live entry indexes). A
+    * saturated latch holds `ts = [lastArrival]` and clears — fresh
     * bucket — once the watermark passes lastArrival + TTL; otherwise an
     * entry is live while its arrival + TTL is ahead of the watermark.
     */
@@ -61,10 +85,9 @@ object StreamingPredicates {
     (saturated, liveIdx)
   }
 
-  /** State-finalize tail shared by the near-dup stream operators: drop
-    * empty unlatched state, otherwise persist `build` and (for finite
-    * TTLs) arm the event-time timeout at the earliest possible eviction
-    * instant (never behind the current watermark).
+  /** State-finalize tail of the near-dup core: drop empty unlatched
+    * state, otherwise persist `build` and (for finite TTLs) arm the
+    * event-time timeout at the earliest possible eviction instant.
     */
   private def finishTtlState[S](
       state: GroupState[S],
@@ -76,10 +99,113 @@ object StreamingPredicates {
     if (empty && !saturated) state.remove()
     else {
       state.update(build)
-      if (ttlMicros < Long.MaxValue && ts.nonEmpty)
-        state.setTimeoutTimestamp(
-          math.max(satAdd(ts.min, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
+      if (ts.nonEmpty) armTtl(state, ts.min, ttlMicros, wmMicros)
     }
+  }
+
+  /** `(band or chunk, bucket key)` — the group key of the banded near-dup
+    * streams. */
+  private implicit val bandKeyEnc: Encoder[(Int, Long)] =
+    Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
+
+  /** One bucket's entries as the near-dup core sees them: parallel id /
+    * arrival / payload columns plus the saturation latch (while latched,
+    * `ids` and `payloads` are empty and `ts` holds the last arrival).
+    */
+  private final case class LiveBucket[P](
+      ids: Array[Long], ts: Array[Long], payloads: IndexedSeq[P], saturated: Boolean)
+
+  /** The bucketed-pair state core of the near-dup streams
+    * ([[minhashNearDupStream]], [[embeddingNearDupStream]],
+    * [[phashNearDupStream]] / [[afpNearDupStream]],
+    * [[videoNearDupStream]]). Every routed copy of an arriving doc lands
+    * in its bucket's state group. Per group and micro-batch the core
+    * reads the watermark, keeps the live entries ([[ttlSurvivors]]),
+    * and walks the on-time arrivals in `(event time, doc id)` order:
+    *   - a latched (dark) bucket only refreshes the latch's clock;
+    *   - an arrival that would push the live population past
+    *     `maxBucketSize` drops the stored entries and latches the bucket
+    *     until the watermark passes its last arrival + TTL (the
+    *     streaming face of the batch skew guard);
+    *   - otherwise the arrival, if `admit`ted, pairs against every live
+    *     entry with a different id and is appended.
+    * Then the bucket is persisted with its timeout ([[finishTtlState]]).
+    *
+    * A family supplies its group key, the payload each entry stores,
+    * and `pair(groupKey, storedId, stored, arriving)`, which applies the
+    * exactly-once rule (only the lowest shared band / chunk / signature
+    * emits the pair) and the exact verification. `load` / `store` convert
+    * the family's own state case class to and from [[LiveBucket]], so
+    * each family keeps its encoded state schema and its checkpoints.
+    */
+  private def bucketedPairs[K, In, P, S, Out](
+      routed: Dataset[In],
+      groupKey: In => K,
+      docId: In => Long,
+      eventTime: In => java.sql.Timestamp,
+      payload: In => P,
+      maxBucketSize: Int,
+      ttlMicros: Long,
+      load: S => LiveBucket[P],
+      store: LiveBucket[P] => S,
+      admit: (scala.collection.IndexedSeq[P], In) => Boolean =
+        (_: scala.collection.IndexedSeq[P], _: In) => true)(
+      pair: (K, Long, P, In) => Option[Out])(
+      implicit keyEnc: Encoder[K], stateEnc: Encoder[S], outEnc: Encoder[Out]): Dataset[Out] =
+    routed
+      .groupByKey(groupKey)
+      .flatMapGroupsWithState[S, Out](OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (key: K, rows: Iterator[In], state: GroupState[S]) =>
+          val wmMicros = state.getCurrentWatermarkMs() * 1000L
+          val prev = state.getOption.map(load)
+            .getOrElse(LiveBucket[P](Array.empty, Array.empty, IndexedSeq.empty, saturated = false))
+
+          val (saturated0, liveIdx) =
+            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
+          var saturated = saturated0
+          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
+          val ts = scala.collection.mutable.ArrayBuffer(
+            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
+          val stored = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.payloads): _*)
+
+          val out = scala.collection.mutable.ArrayBuffer.empty[Out]
+          rows.toSeq.sortBy(d => (tsMicros(eventTime(d)), docId(d))).foreach { d =>
+            val t = tsMicros(eventTime(d))
+            if (t > wmMicros) {
+              if (saturated) {
+                // Dark bucket: arrivals only refresh the latch's clock.
+                ts(0) = math.max(ts(0), t)
+              } else if (ids.length + 1 > maxBucketSize) {
+                saturated = true
+                ids.clear(); stored.clear()
+                ts.clear(); ts += t
+              } else if (admit(stored, d)) {
+                val id = docId(d)
+                var j = 0
+                while (j < ids.length) {
+                  if (ids(j) != id) pair(key, ids(j), stored(j), d).foreach(out += _)
+                  j += 1
+                }
+                ids += id; ts += t; stored += payload(d)
+              }
+            }
+          }
+
+          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
+            store(LiveBucket(ids.toArray, ts.toArray, stored.toIndexedSeq, saturated)))
+          out.iterator
+      }
+
+  /** Lowest band two full bucket vectors share (-1 if none) — the one
+    * group allowed to emit their pair.
+    */
+  private def lowestSharedBand(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0
+    while (i < a.length) {
+      if (a(i) == b(i)) return i
+      i += 1
+    }
+    -1
   }
 
   /** Tumbling-window per-subject predicate counts.
@@ -162,9 +288,7 @@ object StreamingPredicates {
   final case class TimedEvent(
       subject_id: Long,
       timestamp: java.sql.Timestamp,
-      counts: Array[Long]) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      counts: Array[Long])
 
   final case class TriggerWindow(
       subject_id: Long,
@@ -187,11 +311,9 @@ object StreamingPredicates {
     * its predicate sums are emitted exactly once, when the event-time
     * watermark passes the window end (so the window is provably closed).
     *
-    * State per subject = pending triggers + events still inside some
-    * pending-or-future window; both are pruned on every watermark advance,
-    * so state is bounded by (horizon + allowed lateness) × event rate.
-    * Rows older than the watermark are dropped at entry (the same
-    * discipline `withWatermark` applies to windowed aggregates).
+    * This is [[cohortWindows]] with one unconstrained temporal window,
+    * projected onto [[TriggerWindow]] — state, pruning and late-row
+    * handling are that operator's.
     */
   def triggerWindowCounts(
       events: Dataset[TimedEvent],
@@ -199,65 +321,12 @@ object StreamingPredicates {
       triggerIdx: Int,
       horizonMicros: Long
   ): Dataset[TriggerWindow] = {
-    implicit val outEnc = Encoders.product[TriggerWindow]
-    implicit val stateEnc = Encoders.product[TriggerState]
-    events
-      .groupByKey(_.subject_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[TriggerState, TriggerWindow](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (subject: Long, rows: Iterator[TimedEvent], state: GroupState[TriggerState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val prev = state.getOption.getOrElse(
-            TriggerState(Array.empty, Array.empty, Array.empty))
-
-          // Ingest on-time rows; events double as triggers when flagged.
-          val triggers = scala.collection.mutable.ArrayBuffer(prev.pendingTriggers: _*)
-          val bufTs = scala.collection.mutable.ArrayBuffer(prev.bufferedTs: _*)
-          val bufCounts = scala.collection.mutable.ArrayBuffer(prev.bufferedCounts: _*)
-          rows.foreach { e =>
-            if (e.tsMicros > wmMicros) {
-              bufTs += e.tsMicros
-              bufCounts ++= e.counts
-              if (e.counts(triggerIdx) > 0) triggers += e.tsMicros
-            }
-          }
-
-          // Close every window whose end the watermark has passed.
-          val (due, stillPending) = triggers.partition(t => t + horizonMicros <= wmMicros)
-          val emissions = due.sorted.map { t =>
-            val sums = Array.fill(nPreds)(0L)
-            var r = 0
-            while (r < bufTs.length) {
-              val ts = bufTs(r)
-              if (ts > t && ts <= t + horizonMicros) {
-                var i = 0
-                while (i < nPreds) { sums(i) += bufCounts(r * nPreds + i); i += 1 }
-              }
-              r += 1
-            }
-            TriggerWindow(subject, t, t + horizonMicros, sums)
-          }
-
-          // Prune events no pending or future trigger can reach: windows
-          // are (t, t+h], pending triggers all have t >= min(pending), and
-          // future triggers have t > wm — so an event is dead once
-          // ts_e <= min(wm, earliest pending trigger).
-          val pruneBelow = stillPending.foldLeft(wmMicros)(math.min)
-          val keepIdx = (0 until bufTs.length).filter(r => bufTs(r) > pruneBelow)
-          val keepTs = keepIdx.map(bufTs).toArray
-          val keepCounts = keepIdx.flatMap(r =>
-            (0 until nPreds).map(i => bufCounts(r * nPreds + i))).toArray
-
-          if (stillPending.isEmpty && keepTs.isEmpty) state.remove()
-          else {
-            state.update(TriggerState(stillPending.toArray, keepTs, keepCounts))
-            val nextDeadline =
-              (stillPending.map(_ + horizonMicros) ++ keepTs.map(_ + horizonMicros)).min
-            state.setTimeoutTimestamp(nextDeadline / 1000L + 1L)
-          }
-          emissions.iterator
-      }
+    val window = StreamWindowSpec("window", 0L, horizonMicros, endPredIdx = -1,
+      maxHorizonMicros = horizonMicros,
+      minCounts = Array.fill(nPreds)(Long.MinValue), maxCounts = Array.fill(nPreds)(Long.MaxValue))
+    cohortWindows(events, nPreds, triggerIdx, Seq(window))
+      .map(r => TriggerWindow(r.subject_id, r.triggerTsMicros, r.windowEndsMicros(0), r.counts))(
+        Encoders.product[TriggerWindow])
   }
 
   /** One window of a streaming cohort task, anchored at the trigger.
@@ -359,10 +428,11 @@ object StreamingPredicates {
           val bufTs = scala.collection.mutable.ArrayBuffer(prev.bufferedTs: _*)
           val bufCounts = scala.collection.mutable.ArrayBuffer(prev.bufferedCounts: _*)
           rows.foreach { e =>
-            if (e.tsMicros > wmMicros) {
-              bufTs += e.tsMicros
+            val t = tsMicros(e.timestamp)
+            if (t > wmMicros) {
+              bufTs += t
               bufCounts ++= e.counts
-              if (e.counts(triggerIdx) > 0) triggers += e.tsMicros
+              if (e.counts(triggerIdx) > 0) triggers += t
             }
           }
 
@@ -575,6 +645,24 @@ object StreamingPredicates {
     }
   }
 
+  /** Decode each arriving `(id, timestamp, payload)` row into its routed
+    * copies (`route`; none = never paired). The decode is a typed flatMap
+    * (object round-trip), which drops any caller watermark, so the
+    * watermark (`watermarkDelay`) is applied after it.
+    */
+  private def decodeRouted[T: Encoder](
+      media: DataFrame, idCol: String, payloadCol: String, watermarkDelay: String)(
+      route: (Long, java.sql.Timestamp, Array[Byte]) => Seq[T]): Dataset[T] = {
+    implicit val rowEnc =
+      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.BINARY)
+    media
+      .select(col(idCol).cast("long"), col("timestamp"), col(payloadCol))
+      .as[(Long, java.sql.Timestamp, Array[Byte])]
+      .flatMap(route.tupled)
+      .withWatermark("timestamp", watermarkDelay)
+      .as[T]
+  }
+
   /** One (band, bucket)-routed copy of an incoming document for
     * [[minhashNearDupStream]]: carries the FULL bucket vector (all bands)
     * so any two colliding docs can agree on the lowest band they share —
@@ -587,9 +675,7 @@ object StreamingPredicates {
       doc_id: Long,
       timestamp: java.sql.Timestamp,
       buckets: Array[Long],
-      packed: String) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      packed: String)
 
   /** Per-bucket state for [[minhashNearDupStream]]: parallel flat arrays,
     * one entry per live doc (`buckets` row-major with stride = bands —
@@ -684,80 +770,28 @@ object StreamingPredicates {
       .select(
         col("doc_id"), col("timestamp"), col("packed"), col("buckets"),
         posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .select("band", "bucket", "doc_id", "timestamp", "buckets", "packed")
       .as[BandedDoc]
 
     implicit val pairEnc = Encoders.product[NearDupPair]
     implicit val stateEnc = Encoders.product[BucketDocsState]
-    banded
-      .groupByKey(d => (d.band, d.bucket))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .flatMapGroupsWithState[BucketDocsState, NearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long), rows: Iterator[BandedDoc], state: GroupState[BucketDocsState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val band = key._1
-          val prev = state.getOption.getOrElse(
-            BucketDocsState(Array.empty, Array.empty, Array.empty, Array.empty, saturated = false))
-
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val packed = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.packed): _*)
-          val bkts = scala.collection.mutable.ArrayBuffer(
-            liveIdx.flatMap(j => (0 until bands).map(i => prev.buckets(j * bands + i))): _*)
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[NearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                // Dark bucket: arrivals only refresh the latch's clock.
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                // Skew guard: this bucket's live population blew the cap —
-                // drop its docs and go dark until the latch expires.
-                saturated = true
-                ids.clear(); packed.clear(); bkts.clear()
-                ts.clear(); ts += d.tsMicros
-              } else {
-                val dSet = d.packed.split(sep).toSet
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id) {
-                    // Lowest shared band: the one group allowed to emit.
-                    var mb = -1
-                    var i = 0
-                    while (mb < 0 && i < bands) {
-                      if (bkts(j * bands + i) == d.buckets(i)) mb = i
-                      i += 1
-                    }
-                    if (mb == band) {
-                      val eSet = packed(j).split(sep).toSet
-                      val inter = dSet.intersect(eSet).size
-                      val uni = dSet.size + eSet.size - inter
-                      val jac = if (uni == 0) 0.0 else inter.toDouble / uni
-                      if (jac >= threshold)
-                        out += NearDupPair(
-                          math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), jac)
-                    }
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros; packed += d.packed
-                bkts ++= d.buckets
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            BucketDocsState(
-              ids.toArray, ts.toArray, packed.toArray, bkts.toArray, saturated))
-          out.iterator
-      }
+    bucketedPairs[(Int, Long), BandedDoc, (String, Array[Long]), BucketDocsState, NearDupPair](
+      banded, d => (d.band, d.bucket), _.doc_id, _.timestamp, d => (d.packed, d.buckets),
+      maxBucketSize, ttlMicros,
+      load = s => LiveBucket(s.ids, s.ts,
+        s.ids.indices.map(j => (s.packed(j), s.buckets.slice(j * bands, (j + 1) * bands))),
+        s.saturated),
+      store = b => BucketDocsState(b.ids, b.ts, b.payloads.map(_._1).toArray,
+        b.payloads.flatMap(_._2).toArray, b.saturated)) {
+      case ((band, _), id, (packed, buckets), d) if lowestSharedBand(buckets, d.buckets) == band =>
+        val dSet = d.packed.split(sep).toSet
+        val eSet = packed.split(sep).toSet
+        val inter = dSet.intersect(eSet).size
+        val uni = dSet.size + eSet.size - inter
+        val jac = if (uni == 0) 0.0 else inter.toDouble / uni
+        if (jac >= threshold) Some(NearDupPair(math.min(id, d.doc_id), math.max(id, d.doc_id), jac))
+        else None
+      case _ => None
+    }
   }
 
   /** One (band, bucket)-routed copy of an incoming vector for
@@ -771,9 +805,7 @@ object StreamingPredicates {
       doc_id: Long,
       timestamp: java.sql.Timestamp,
       buckets: Array[Long],
-      vec: Array[Float]) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      vec: Array[Float])
 
   /** Per-bucket state for [[embeddingNearDupStream]]: parallel flat
     * arrays, one entry per live vector (`vecs` row-major with stride =
@@ -861,18 +893,17 @@ object StreamingPredicates {
       .select(
         col("doc_id"), col("timestamp"), col("vec"), col("buckets"),
         posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .select("band", "bucket", "doc_id", "timestamp", "buckets", "vec")
       .as[HplaneDoc]
 
-    // Exact cosine over flat state arrays — double accumulation in
-    // element order, matching FloatVectorCosine (VectorExpressions) so
-    // streamed `cos` values equal the batch expression's bit for bit.
-    def cosineAt(vecs: Array[Float], off: Int, dim: Int, q: Array[Float]): Double = {
+    // Exact cosine — double accumulation in element order, matching
+    // FloatVectorCosine (VectorExpressions) so streamed `cos` values
+    // equal the batch expression's bit for bit.
+    def cosine(x: Array[Float], y: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(dim, q.length)
+      val n = math.min(x.length, y.length)
       while (i < n) {
-        val xv = vecs(off + i).toDouble
-        val yv = q(i).toDouble
+        val xv = x(i).toDouble
+        val yv = y(i).toDouble
         dot += xv * yv; na += xv * xv; nb += yv * yv; i += 1
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
@@ -880,85 +911,29 @@ object StreamingPredicates {
 
     implicit val pairEnc = Encoders.product[EmbNearDupPair]
     implicit val stateEnc = Encoders.product[BucketVecsState]
-    banded
-      .groupByKey(d => (d.band, d.bucket))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .flatMapGroupsWithState[BucketVecsState, EmbNearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long), rows: Iterator[HplaneDoc], state: GroupState[BucketVecsState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val band = key._1
-          val prev = state.getOption.getOrElse(
-            BucketVecsState(Array.empty, Array.empty, Array.empty, Array.empty, saturated = false))
-          // The state stride: every stored vector's length. Established by
-          // the first append; a later arrival with a DIFFERENT length is a
-          // contract violation (embeddings must share one dim) and is
-          // skipped below — indexing state with the arrival's length would
-          // read across vector boundaries or out of bounds.
-          var dim = if (prev.ids.isEmpty) 0 else prev.vecs.length / prev.ids.length
-
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val vecs = scala.collection.mutable.ArrayBuffer(
-            liveIdx.flatMap(j => (0 until dim).map(i => prev.vecs(j * dim + i))): _*)
-          val bkts = scala.collection.mutable.ArrayBuffer(
-            liveIdx.flatMap(j => (0 until bands).map(i => prev.buckets(j * bands + i))): _*)
-          if (ids.isEmpty) dim = 0 // fully evicted: next arrival re-establishes
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[EmbNearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                saturated = true
-                ids.clear(); vecs.clear(); bkts.clear()
-                ts.clear(); ts += d.tsMicros
-              } else if (dim != 0 && d.vec.length != dim) {
-                // Mixed-dim arrival: cannot be compared against (or stored
-                // beside) the bucket's vectors — drop it.
-                ()
-              } else {
-                if (dim == 0) dim = d.vec.length
-                // One flat snapshot per arrival (not per pair) for the
-                // unboxed cosine loop; offsets use the STATE stride `dim`
-                // (== d.vec.length here, enforced above).
-                val vecsArr = vecs.toArray
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id) {
-                    // Lowest shared band: the one group allowed to emit.
-                    var mb = -1
-                    var i = 0
-                    while (mb < 0 && i < bands) {
-                      if (bkts(j * bands + i) == d.buckets(i)) mb = i
-                      i += 1
-                    }
-                    if (mb == band) {
-                      val c = cosineAt(vecsArr, j * dim, dim, d.vec)
-                      if (c >= threshold)
-                        out += EmbNearDupPair(
-                          math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), c)
-                    }
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros
-                vecs ++= d.vec; bkts ++= d.buckets
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            BucketVecsState(
-              ids.toArray, ts.toArray, vecs.toArray, bkts.toArray, saturated))
-          out.iterator
-      }
+    bucketedPairs[(Int, Long), HplaneDoc, (Array[Float], Array[Long]), BucketVecsState,
+        EmbNearDupPair](
+      banded, d => (d.band, d.bucket), _.doc_id, _.timestamp, d => (d.vec, d.buckets),
+      maxBucketSize, ttlMicros,
+      load = { s =>
+        // The state stride: every stored vector's length.
+        val dim = if (s.ids.isEmpty) 0 else s.vecs.length / s.ids.length
+        LiveBucket(s.ids, s.ts, s.ids.indices.map(j =>
+          (s.vecs.slice(j * dim, (j + 1) * dim), s.buckets.slice(j * bands, (j + 1) * bands))),
+          s.saturated)
+      },
+      store = b => BucketVecsState(b.ids, b.ts, b.payloads.flatMap(_._1).toArray,
+        b.payloads.flatMap(_._2).toArray, b.saturated),
+      // Embeddings must share one dim: an arrival of a different length
+      // than the bucket's vectors can be neither compared against nor
+      // stored beside them, so it is dropped.
+      admit = (stored, d) => stored.isEmpty || stored.head._1.length == d.vec.length) {
+      case ((band, _), id, (vec, buckets), d) if lowestSharedBand(buckets, d.buckets) == band =>
+        val c = cosine(vec, d.vec)
+        if (c >= threshold) Some(EmbNearDupPair(math.min(id, d.doc_id), math.max(id, d.doc_id), c))
+        else None
+      case _ => None
+    }
   }
 
   /** One (chunk, key)-routed copy of an incoming image signature for
@@ -972,9 +947,7 @@ object StreamingPredicates {
       key: Long,
       doc_id: Long,
       timestamp: java.sql.Timestamp,
-      sig: Long) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      sig: Long)
 
   /** Per-bucket state for [[phashNearDupStream]]: 24 bytes per live doc
     * (id, arrival, signature) — parallel flat arrays as in
@@ -1053,11 +1026,11 @@ object StreamingPredicates {
       maxHamming, maxBucketSize, ttlMicros, watermarkDelay, idCol, payloadCol)
   }
 
-  /** The shared 64-bit-signature streaming near-dup core: decode each
+  /** The 64-bit-signature near-dup stream behind phash and afp: decode each
     * arriving payload to a signature (`decode` — dHash for images, HK
     * fingerprint for audio; None = never paired), band into 4×16-bit
-    * chunk buckets, and pair inside `flatMapGroupsWithState` bucket
-    * state with the lowest-shared-chunk dedup rule.
+    * chunk buckets, and pair in the shared core ([[bucketedPairs]])
+    * with the lowest-shared-chunk dedup rule.
     */
   private def sigNearDupStream(
       media: DataFrame,
@@ -1069,80 +1042,29 @@ object StreamingPredicates {
       idCol: String,
       payloadCol: String
   ): Dataset[ImageNearDupPair] = {
-    implicit val rowEnc =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.BINARY)
     implicit val phashEnc = Encoders.product[PhashDoc]
-    val banded = media
-      .select(col(idCol).cast("long"), col("timestamp"), col(payloadCol))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        decode(payload).toSeq.flatMap { sig =>
-          (0 until 4).map(c => PhashDoc(c, (sig >>> (c * 16)) & 0xffffL, id, ts, sig))
-        }
+    val banded = decodeRouted[PhashDoc](media, idCol, payloadCol, watermarkDelay) {
+      (id, ts, payload) => decode(payload).toSeq.flatMap { sig =>
+        (0 until 4).map(c => PhashDoc(c, (sig >>> (c * 16)) & 0xffffL, id, ts, sig))
       }
-      .withWatermark("timestamp", watermarkDelay)
-      .as[PhashDoc]
-
-    def lowestSharedChunk(a: Long, b: Long): Int = {
-      var c = 0
-      while (c < 4) {
-        if (((a >>> (c * 16)) & 0xffffL) == ((b >>> (c * 16)) & 0xffffL)) return c
-        c += 1
-      }
-      -1
     }
+
+    def lowestSharedChunk(a: Long, b: Long): Int =
+      (0 until 4).find(c => (((a ^ b) >>> (c * 16)) & 0xffffL) == 0L).getOrElse(-1)
 
     implicit val pairEnc = Encoders.product[ImageNearDupPair]
     implicit val stateEnc = Encoders.product[BucketSigsState]
-    banded
-      .groupByKey(d => (d.chunk, d.key))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .flatMapGroupsWithState[BucketSigsState, ImageNearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long), rows: Iterator[PhashDoc], state: GroupState[BucketSigsState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val chunk = key._1
-          val prev = state.getOption.getOrElse(
-            BucketSigsState(Array.empty, Array.empty, Array.empty, saturated = false))
-
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val sigs = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.sigs): _*)
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[ImageNearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                saturated = true
-                ids.clear(); sigs.clear()
-                ts.clear(); ts += d.tsMicros
-              } else {
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id && lowestSharedChunk(sigs(j), d.sig) == chunk) {
-                    val hamming = java.lang.Long.bitCount(sigs(j) ^ d.sig)
-                    if (hamming <= maxHamming)
-                      out += ImageNearDupPair(
-                        math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), hamming)
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros; sigs += d.sig
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            BucketSigsState(ids.toArray, ts.toArray, sigs.toArray, saturated))
-          out.iterator
-      }
+    bucketedPairs[(Int, Long), PhashDoc, Long, BucketSigsState, ImageNearDupPair](
+      banded, d => (d.chunk, d.key), _.doc_id, _.timestamp, _.sig,
+      maxBucketSize, ttlMicros,
+      load = s => LiveBucket(s.ids, s.ts, s.sigs.toIndexedSeq, s.saturated),
+      store = b => BucketSigsState(b.ids, b.ts, b.payloads.toArray, b.saturated)) {
+      case ((chunk, _), id, sig, d) =>
+        val hamming = java.lang.Long.bitCount(sig ^ d.sig)
+        if (hamming <= maxHamming && lowestSharedChunk(sig, d.sig) == chunk)
+          Some(ImageNearDupPair(math.min(id, d.doc_id), math.max(id, d.doc_id), hamming))
+        else None
+    }
   }
 
   /** One (frame-signature)-routed copy of an arriving clip for
@@ -1156,9 +1078,7 @@ object StreamingPredicates {
       fp: Long,
       doc_id: Long,
       timestamp: java.sql.Timestamp,
-      fps: Array[Long]) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      fps: Array[Long])
 
   /** Per-frame-signature bucket state for [[videoNearDupStream]]: the
     * live clips holding this signature, each with its full sorted
@@ -1224,19 +1144,12 @@ object StreamingPredicates {
     requireIntegralId(media, idCol, "videoNearDupStream")
     require(frameBytes > 0, s"frameBytes must be positive, got $frameBytes")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    implicit val rowEnc =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.BINARY)
     implicit val vfpEnc = Encoders.product[VfpDoc]
-    val routed = media
-      .select(col(idCol).cast("long"), col("timestamp"), col(payloadCol))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        val fps = graft.operators.VideoFingerprint
-          .clipSignatures(payload, frameBytes, stride)
+    val routed = decodeRouted[VfpDoc](media, idCol, payloadCol, watermarkDelay) {
+      (id, ts, payload) =>
+        val fps = graft.operators.VideoFingerprint.clipSignatures(payload, frameBytes, stride)
         fps.toSeq.map(f => VfpDoc(f, id, ts, fps))
-      }
-      .withWatermark("timestamp", watermarkDelay)
-      .as[VfpDoc]
+    }
 
     // (count, lowest) of the intersection of two sorted distinct sets.
     def shared(a: Array[Long], b: Array[Long]): (Long, Long) = {
@@ -1249,55 +1162,20 @@ object StreamingPredicates {
       (n, lowest)
     }
 
+    implicit val keyEnc = Encoders.scalaLong
     implicit val pairEnc = Encoders.product[ClipNearDupPair]
     implicit val stateEnc = Encoders.product[VfpBucketState]
-    routed
-      .groupByKey(_.fp)(Encoders.scalaLong)
-      .flatMapGroupsWithState[VfpBucketState, ClipNearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (fp: Long, rows: Iterator[VfpDoc], state: GroupState[VfpBucketState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val prev = state.getOption.getOrElse(
-            VfpBucketState(Array.empty, Array.empty, Array.empty, saturated = false))
-
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val sets = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.fps): _*)
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[ClipNearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                saturated = true
-                ids.clear(); sets.clear()
-                ts.clear(); ts += d.tsMicros
-              } else {
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id) {
-                    val (n, lowest) = shared(sets(j), d.fps)
-                    if (n >= minShared && lowest == fp)
-                      out += ClipNearDupPair(
-                        math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), n)
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros; sets += d.fps
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            VfpBucketState(ids.toArray, ts.toArray, sets.toArray, saturated))
-          out.iterator
-      }
+    bucketedPairs[Long, VfpDoc, Array[Long], VfpBucketState, ClipNearDupPair](
+      routed, _.fp, _.doc_id, _.timestamp, _.fps,
+      maxBucketSize, ttlMicros,
+      load = s => LiveBucket(s.ids, s.ts, s.fps.toIndexedSeq, s.saturated),
+      store = b => VfpBucketState(b.ids, b.ts, b.payloads.toArray, b.saturated)) {
+      (fp, id, fps, d) =>
+        val (n, lowest) = shared(fps, d.fps)
+        if (n >= minShared && lowest == fp)
+          Some(ClipNearDupPair(math.min(id, d.doc_id), math.max(id, d.doc_id), n))
+        else None
+    }
   }
 
   /** One occurrence of a k-token window on the stream: routed to its
@@ -1310,9 +1188,7 @@ object StreamingPredicates {
       wl: Int,
       doc_id: Long,
       timestamp: java.sql.Timestamp,
-      pos: Int) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      pos: Int)
 
   /** Per-window-key state for [[substringDupStream]]: occurrences seen so
     * far and the last arrival (the TTL clock) — 16 bytes per distinct
@@ -1380,26 +1256,22 @@ object StreamingPredicates {
         (_: (Long, Int), rows: Iterator[WindowOcc], state: GroupState[WinKeyState]) =>
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
           val live = state.getOption.filter(s => satAdd(s.lastTs, ttlMicros) > wmMicros)
-          val fresh = rows.toSeq.filter(_.tsMicros > wmMicros)
+          val fresh = rows.toSeq.filter(o => tsMicros(o.timestamp) > wmMicros)
           if (fresh.isEmpty) {
             // Timeout tick (or an all-late batch): evict or keep as-is.
             live match {
               case None => if (state.exists) state.remove()
               case Some(s) =>
                 state.update(s)
-                if (ttlMicros < Long.MaxValue)
-                  state.setTimeoutTimestamp(
-                    math.max(satAdd(s.lastTs, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
+                armTtl(state, s.lastTs, ttlMicros, wmMicros)
             }
             Iterator.empty
           } else {
             val total = live.map(_.count).getOrElse(0L) + fresh.length
-            val lastTs = math.max(
-              live.map(_.lastTs).getOrElse(Long.MinValue), fresh.map(_.tsMicros).max)
+            val lastTs = math.max(live.map(_.lastTs).getOrElse(Long.MinValue),
+              fresh.map(o => tsMicros(o.timestamp)).max)
             state.update(WinKeyState(total, lastTs))
-            if (ttlMicros < Long.MaxValue)
-              state.setTimeoutTimestamp(
-                math.max(satAdd(lastTs, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
+            armTtl(state, lastTs, ttlMicros, wmMicros)
             if (total >= 2)
               fresh.sortBy(o => (o.doc_id, o.pos))
                 .map(o => SubstringHit(o.doc_id, o.pos)).iterator
@@ -1432,29 +1304,6 @@ object StreamingPredicates {
           .cast("long").as("covered_tokens"))
   }
 
-  /** Streaming model-based quality scoring — σ(w·x) under a FITTED
-    * [[graft.operators.QualityClassifier.train]] model frame for every
-    * arriving doc, STATELESS (the batch scorer's explode + distinct +
-    * window normalization are all stateful plan shapes a stream can't
-    * run; here the hashed feature set is built IN-ROW — array_distinct
-    * over the hashed grams — and the margin is one codegen'd `aggregate`
-    * fold over it against the broadcast weight map, divided by √n_d for
-    * the same unit-L2 normalization). The ingest-path face of the
-    * GPT-3-style quality filter: train offline on a labeled reference
-    * corpus, tag every arriving doc with its quality score, threshold
-    * downstream.
-    *
-    * Scores equal the batch [[graft.operators.QualityClassifier.score]]
-    * up to summation order (the batch path sums w·x per feature row, this
-    * one folds Σw then scales — asserted ≤5e-5 in StreamingSpec, well
-    * inside the batch scorer's own 1e-4 rounding grain). Docs with no
-    * tokens get a NULL quality (the batch scorer omits them entirely).
-    *
-    * @param model a [[graft.operators.QualityClassifier.train]] frame
-    *              (or its parquet round-trip): (feat, w) with bias at −1.
-    * @return the input rows plus `quality` — unrounded; callers
-    *         threshold, they don't hash-compare.
-    */
   /** Streaming benchmark decontamination — exact matched-n-gram counts
     * for every arriving doc against a static probe frame (the eval set),
     * the ingest-time face of [[graft.operators.Decontaminate.matches]]:
@@ -1491,6 +1340,29 @@ object StreamingPredicates {
       .select(col(idCol), col(tsCol), col("matched_ngrams"))
   }
 
+  /** Streaming model-based quality scoring — σ(w·x) under a FITTED
+    * [[graft.operators.QualityClassifier.train]] model frame for every
+    * arriving doc, STATELESS (the batch scorer's explode + distinct +
+    * window normalization are all stateful plan shapes a stream can't
+    * run; here the hashed feature set is built IN-ROW — array_distinct
+    * over the hashed grams — and the margin is one codegen'd `aggregate`
+    * fold over it against the broadcast weight map, divided by √n_d for
+    * the same unit-L2 normalization). The ingest-path face of the
+    * GPT-3-style quality filter: train offline on a labeled reference
+    * corpus, tag every arriving doc with its quality score, threshold
+    * downstream.
+    *
+    * Scores equal the batch [[graft.operators.QualityClassifier.score]]
+    * up to summation order (the batch path sums w·x per feature row, this
+    * one folds Σw then scales — asserted ≤5e-5 in StreamingSpec, well
+    * inside the batch scorer's own 1e-4 rounding grain). Docs with no
+    * tokens get a NULL quality (the batch scorer omits them entirely).
+    *
+    * @param model a [[graft.operators.QualityClassifier.train]] frame
+    *              (or its parquet round-trip): (feat, w) with bias at −1.
+    * @return the input rows plus `quality` — unrounded; callers
+    *         threshold, they don't hash-compare.
+    */
   def qualityScoreStream(
       docs: DataFrame,
       model: DataFrame,

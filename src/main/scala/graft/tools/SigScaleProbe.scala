@@ -72,13 +72,8 @@ object SigScaleProbe {
     val bigMul = args.lift(2).map(_.toInt).getOrElse(32)
     // Saturation probe (BENCH_NOTES §21/§28): arg 4 sizes the shard —
     // a ~100k-distinct-sig shard saturates the narrow 4×16-bit band
-    // keyspace. Env SPARK_GRAFT_WIDE_THRESHOLD opts into the triple
-    // widening for A/B runs (default = disabled/narrow; 1 forces wide
-    // — measured 5-15x slower on local[32], §28, which is why narrow
-    // is the default).
+    // keyspace.
     val shardN = args.lift(3).map(_.toLong).getOrElse(20000L)
-    val wideThreshold = sys.env.get("SPARK_GRAFT_WIDE_THRESHOLD")
-      .map(_.toInt).getOrElse(graft.operators.Dedup.WideBandThreshold)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Tables
       .configure(
@@ -116,15 +111,13 @@ object SigScaleProbe {
         var pairsIncr = 0L
         val tIngest = time {
           pairsIncr = PerceptualHash
-            .dedupIncrementalSigs(shard, corpus, maxHamming = 2,
-              wideThreshold = wideThreshold).count()
+            .dedupIncrementalSigs(shard, corpus, maxHamming = 2).count()
         }
         var pairsFull = 0L
         val tFull = time {
           pairsFull = PerceptualHash
             .dedupIncrementalSigs(corpus.unionByName(shard),
-              corpus.limit(0), maxHamming = 2,
-              wideThreshold = wideThreshold).count()
+              corpus.limit(0), maxHamming = 2).count()
         }
         println(f"[sig-scale] scalar $label%-4s corpus=$n%9d shard=$shardN%6d " +
           f"ingest=$tIngest%6.2fs (pairs=$pairsIncr) full=$tFull%7.2fs " +

@@ -1,21 +1,22 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.functions._
 
 import graft.config.TaskConfig
 import graft.sources.PredicateFrames
 
-/** All six reference sample task configs must parse to the right window
-  * trees and run end-to-end over a synthetic MEDS frame.
-  * (reference: the six YAML files under sample_configs/)
+/** Six sample task configs must parse to the right window trees and run
+  * end-to-end over a synthetic MEDS frame. The configs are repo-owned test
+  * resources (`src/test/resources/sample_configs/`) named after the
+  * reference's six sample tasks and covering the same constructs
+  * (FIXTURES.md §5), written against the codes in `medsDf`.
   */
 class SampleConfigsSpec extends SparkSpec {
 
-  private def load(name: String): TaskConfig =
-    TaskConfig.fromYaml(
-      Files.readString(Paths.get(s"/root/reference/sample_configs/$name.yaml")))
+  private def load(name: String): TaskConfig = {
+    val src = scala.io.Source.fromResource(s"sample_configs/$name.yaml")
+    try TaskConfig.fromYaml(src.mkString) finally src.close()
+  }
 
   private lazy val medsDf = {
     import spark.implicits._

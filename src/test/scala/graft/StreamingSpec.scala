@@ -990,6 +990,52 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("phashNearDupStream saturation latch darkens a bucket until the TTL passes") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.harness.MediaFixtures
+    import graft.operators.PerceptualHash
+
+    // Every copy of `dup` carries one signature, so all of them land in
+    // the same four chunk buckets; `far` differs in every chunk and only
+    // moves the watermark.
+    val sig = 0x0123456789abcdefL
+    val dup = MediaFixtures.bmpForHash(sig)
+    val far = MediaFixtures.bmpForHash(~sig)
+    assert(PerceptualHash.dhash(dup).contains(sig) && PerceptualHash.dhash(far).contains(~sig))
+
+    val input = MemoryStream[(Long, Timestamp, Array[Byte])]
+    val media = input.toDF().toDF("media_id", "timestamp", "payload")
+    val out = StreamingPredicates.phashNearDupStream(
+      media, maxHamming = 2, maxBucketSize = 2, ttlMicros = 3600L * 1000000L,
+      watermarkDelay = "0 seconds")
+    val query = out.writeStream
+      .format("memory").queryName("phash_latch").outputMode("append").start()
+    def pairs = spark.table("phash_latch").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      input.addData((1L, ts("2024-01-01 10:00:00"), dup), (2L, ts("2024-01-01 10:01:00"), dup))
+      query.processAllAvailable()
+      assert(pairs == Set((1L, 2L)))
+      // The third live arrival passes maxBucketSize = 2: the bucket goes
+      // dark and pairs with nothing.
+      input.addData((3L, ts("2024-01-01 10:02:00"), dup))
+      query.processAllAvailable()
+      // Still dark: a later arrival only refreshes the latch clock.
+      input.addData((4L, ts("2024-01-01 10:30:00"), dup))
+      query.processAllAvailable()
+      assert(pairs == Set((1L, 2L)), s"a dark bucket must emit no pairs; got $pairs")
+      // Move the watermark past the last arrival (10:30) + TTL.
+      input.addData((100L, ts("2024-01-01 12:00:00"), far))
+      query.processAllAvailable()
+      // The latch has expired: the bucket is fresh and pairs again.
+      input.addData((5L, ts("2024-01-01 12:10:00"), dup), (6L, ts("2024-01-01 12:11:00"), dup))
+      query.processAllAvailable()
+      assert(pairs == Set((1L, 2L), (5L, 6L)),
+        s"expected the pre-latch pair and the post-expiry pair only; got $pairs")
+    } finally query.stop()
+  }
+
   test("minhashNearDupStream evicts bucket state after the TTL") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
